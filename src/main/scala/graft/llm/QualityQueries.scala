@@ -173,41 +173,18 @@ object QualityQueries extends graft.core.QueryModule {
   // same way on both engines, folded in tok-sorted order (t8's discipline).
   /** Per-document (doc_id, n_tokens, lw) under the target-vs-raw model —
     * shared by [[dsir1]] and the spec's corpus-mean baseline. */
-  private[llm] def dsirScored(s: SparkSession, dir: String): DataFrame =
-    dsirScoredShape(s, dir, sharedStage = false)
-
-  /** r11 (the t9 single-exchange device): `sharedStage = true` aggregates
-    * the token stream ONCE at its finest grain — (doc_id, lang, tok); lang
-    * is functionally dependent on doc_id (one row per doc in `documents`),
-    * so this IS the (doc_id, tok) grain with lang riding — and derives the
-    * raw and target unigram models by re-aggregating those counts (Σ c per
-    * tok ≡ COUNT(*) per tok, the lang = 'en' filter applied on the counted
-    * rows — exact integers). The r10 shape tokenized and shuffled the full
-    * stream THREE times (raw counts, target counts, per-doc counts:
-    * different keys, nothing reusable); now all three consumers hang off
-    * one exchange (ReusedExchange at runtime) and the re-aggregations run
-    * over doc-term pairs. Output identity asserted per round (T9Probe). */
-  private[llm] def dsirScoredShape(s: SparkSession, dir: String,
-      sharedStage: Boolean): DataFrame = {
+  private[llm] def dsirScored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pt = TextOps.docTokens(Tables.documents(s, dir), $"doc_id", $"text",
       keep = Seq($"lang"))
-    val dcl = pt.groupBy($"doc_id", $"lang", $"tok").agg(count(lit(1)).as("c"))
-    val rawC =
-      if (sharedStage) dcl.groupBy($"tok").agg(sum($"c").as("cr0"))
-      else pt.groupBy($"tok").agg(count(lit(1)).as("cr0"))
-    val tgtC =
-      if (sharedStage) dcl.filter($"lang" === "en").groupBy($"tok").agg(sum($"c").as("ct0"))
-      else pt.filter($"lang" === "en").groupBy($"tok").agg(count(lit(1)).as("ct0"))
+    val rawC = pt.groupBy($"tok").agg(count(lit(1)).as("cr0"))
+    val tgtC = pt.filter($"lang" === "en").groupBy($"tok").agg(count(lit(1)).as("ct0"))
     // shared vocab = raw vocab (target tokens are a subset of raw's); add-1
     // smoothing keeps unseen-in-target tokens finite
     val model = rawC.join(tgtC, Seq("tok"), "left")
       .select($"tok", ($"cr0" + 1L).as("cr"), (coalesce($"ct0", lit(0L)) + 1L).as("ct"))
     val totals = model.agg(sum($"cr").as("dr"), sum($"ct").as("dt"))
-    val docTermCounts =
-      if (sharedStage) dcl.select($"doc_id", $"tok", $"c")
-      else pt.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
-    val scored = docTermCounts
+    pt.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
       .join(broadcast(model), "tok")
       .transform(graft.core.ScalarSub.withScalars(_, totals))
       .withColumn("term", $"c".cast("double") *
@@ -218,7 +195,6 @@ object QualityQueries extends graft.core.QueryModule {
         sort_array(collect_list(struct($"tok", $"term"))).as("ts"))
       .withColumn("lw", aggregate($"ts", lit(0.0), (acc, x) => acc + x("term")))
       .select($"doc_id", $"n_tokens", $"lw")
-    scored
   }
 
   /** Corpus mean log-weight (spec baseline). */
@@ -492,31 +468,25 @@ object QualityQueries extends graft.core.QueryModule {
   // rounding guard.
   private val NoveltyTau = 0.5
 
-  def nv1(s: SparkSession, dir: String): DataFrame =
-    nv1Shape(s, dir, copartition = true)
-
-  /** `copartition = true` is the d9DocsShape device, adopted r10
-    * (Nv1Probe, SCALING.md): the shipped agg+join-back shape computed the
-    * tokenize→shingle→explode stream TWICE (duplicated subtrees feeding
-    * the df aggregation and the join probe) and exchanged the ~25-byte
-    * shingle strings twice; ONE explicit repartition(sh) feeds both — the
-    * df agg and the shuffle-hash join-back are co-partitioned on top of
-    * it, the stream is computed once (AQE stage reuse dedupes the second
-    * read into a ReusedExchange), and the join stays sort-free with a
-    * distinct-shingle-bounded build side (a hot boilerplate shingle is ONE
-    * build entry; AQE skew-split applies to SHJ probe streams).
+  /** ONE explicit repartition(sh) feeds both the df aggregation and the
+    * shuffle-hash join-back, which are co-partitioned on top of it (the
+    * d9Docs device): the tokenize→shingle→explode stream is computed once
+    * (AQE stage reuse dedupes the second read into a ReusedExchange), and
+    * the join stays sort-free with a distinct-shingle-bounded build side (a
+    * hot boilerplate shingle is ONE build entry; AQE skew-split applies to
+    * SHJ probe streams). A plain agg + join-back computes the stream twice
+    * and exchanges the ~25-byte shingle strings twice: ~1.8× slower at
+    * sf0.1, ~2.2× at sf1 (SCALING.md r10 probes, nv1 row).
     */
-  private[llm] def nv1Shape(s: SparkSession, dir: String,
-      copartition: Boolean): DataFrame = {
+  def nv1(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sh = Tables.documents(s, dir)
       .select($"doc_id", TextOps.tokens($"text").as("toks"))
       .filter(size($"toks") >= 3)
       .select($"doc_id", explode(array_distinct(TextOps.shingles3($"toks"))).as("sh"))
-    val part = if (copartition) sh.repartition($"sh") else sh
+    val part = sh.repartition($"sh")
     val df = part.groupBy($"sh").agg(count(lit(1)).as("sdf"))
-    (if (copartition) part.join(df.hint("shuffle_hash"), "sh")
-     else part.join(df, "sh"))
+    part.join(df.hint("shuffle_hash"), "sh")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_shingles"),
         sum(when($"sdf" === 1L, 1L).otherwise(0L)).as("n_novel"))

@@ -31,50 +31,36 @@ object LabelPropagation {
     * deduped internally). Returns (node, label) after `rounds` synchronous
     * majority updates from the all-distinct initialization.
     *
-    * Shuffle geometry (r9, corrected r11): sym is checkpointed
-    * pre-partitioned on the per-round join key `v`. The r9 note claimed
-    * the checkpoint KEEPS that partitioning across rounds — it does not
-    * (AQE returns UnknownPartitioning; see the build comment below) —
-    * but the vote join AQE-broadcasts the node-sized labels, so the edge
-    * side escapes the per-round shuffle regardless, and the build
-    * geometry is where the adopted win lives. The build stays one shuffle:
-    * hash partitioning on v alone satisfies the dedup's (u, v) clustering,
-    * so distinct() runs on the repartition exchange without another. Each
-    * round then pays exactly one edge-wide exchange — repartition(u) after
-    * the join — which co-locates BOTH vote aggregations (clustering by u
-    * satisfies the (u, label) grain too), where the r8 shape paid the sym
-    * shuffle plus separate (u, label) and (u) exchanges. Measured
-    * interleaved-A/B (graft.tools.Lp1Probe, local[32]): see SCALING.md. */
-  def run(edges: DataFrame, rounds: Int): DataFrame =
-    run(edges, rounds, prePartition = true)
-
-  private[graft] def run(edges: DataFrame, rounds: Int,
-      prePartition: Boolean): DataFrame = {
-    val sym0 = edges.select(col("u"), col("v"))
+    * Shuffle geometry: sym is built with ONE shuffle — hash partitioning
+    * on v alone satisfies the dedup's (u, v) clustering, so distinct()
+    * runs on the repartition exchange without another. Each round then
+    * pays exactly one edge-wide exchange — repartition(u) after the join —
+    * which co-locates BOTH vote aggregations (clustering by u satisfies
+    * the (u, label) grain too), where a plain sym.distinct() build plus
+    * groupBy-induced exchanges pays the sym shuffle plus separate
+    * (u, label) and (u) exchanges. Measured interleaved-A/B at local[32]
+    * (SCALING.md r9 probes, lp1 row).
+    *
+    * The sym checkpoint does NOT keep its v-partitioning across rounds:
+    * AQE hands localCheckpoints back as UnknownPartitioning (see
+    * GraftSqlBridge.assertHashPartitioned). Pinning it with an asserted
+    * partition count measured a LOSS at sf0.1/local[32] (2.04 → 2.96 s)
+    * and a wash at sf1 (3.68 → 4.04 s; SCALING.md r11 probes, lp1 row):
+    * unlike pr1's SHUFFLE_HASH-hinted joins, lp1's vote join
+    * AQE-broadcasts the node-sized labels, so the edge side escapes the
+    * per-round shuffle anyway and the pin only adds un-coalesced task
+    * floor. */
+  def run(edges: DataFrame, rounds: Int): DataFrame = {
+    val sym = edges.select(col("u"), col("v"))
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-    // r11 correction to the r9 comment: "LogicalRDD keeps the hash
-    // partitioning across the checkpoint" is FALSE under AQE — the
-    // checkpoint comes back UnknownPartitioning and every round
-    // re-shuffles the edge list after all (measured; see
-    // GraftSqlBridge.assertHashPartitioned). The prePartition win that
-    // WAS measured in r9 comes from the build geometry alone (one
-    // exchange whose v-clustering co-supplies the (u, v) dedup). A
-    // pinned-count + asserted variant that makes the original per-round
-    // claim real was probed r11 (Lp1Probe) and measured a LOSS at
-    // sf0.1/local[32] (2.04 → 2.96 s) and a wash at sf1 (3.68 → 4.04 s):
-    // unlike pr1's SHUFFLE_HASH-hinted joins, lp1's vote join can
-    // AQE-broadcast the node-sized labels, so the edge side escapes the
-    // per-round shuffle anyway and the pin only adds un-coalesced task
-    // floor. The r9/r10 shape stays.
-    val sym = (if (prePartition) sym0.repartition(col("v")).distinct()
-               else sym0.distinct())
+      .repartition(col("v")).distinct()
       .localCheckpoint() // read by every round: symmetrize+dedup ONCE
     var labels = sym.select(col("u").as("node")).distinct()
       .withColumn("label", col("node"))
     var prevCkpt: org.apache.spark.sql.DataFrame = null
     for (i <- 1 to rounds) {
       val voted = sym.join(labels.withColumnRenamed("node", "v"), "v")
-      labels = (if (prePartition) voted.repartition(col("u")) else voted)
+      labels = voted.repartition(col("u"))
         .groupBy(col("u"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("u"))

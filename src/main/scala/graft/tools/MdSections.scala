@@ -2,12 +2,10 @@ package graft.tools
 
 /** Section-safe writes to the shared evidence markdown (SCALING.md).
   *
-  * Three tools own one "## …" section each (ScalingProbe's decade,
-  * BandProbe's banding knee, StreamBench's streaming throughput); the
-  * original truncate-at-my-marker-and-append logic meant re-running any
-  * one of them silently deleted every section after its own. Each writer
-  * now REPLACES exactly its own section (marker up to the next "## "
-  * heading) and leaves the rest of the document alone, so the tools are
+  * A tool that owns one "## …" section (StreamBench's streaming
+  * throughput) REPLACES exactly its own section (marker up to the next
+  * "## " heading) and leaves the rest of the document alone, so re-running
+  * it never deletes the sections after its own and writers stay
   * idempotent and order-independent.
   */
 object MdSections {
